@@ -21,6 +21,11 @@ This is the engine-like core the reference delegates to delta-rs
   column in checkpoints, or not at all (``no_stats``); we normalize with
   ``from_json`` against a stats schema derived from the table's
   ``metaData.schemaString``.
+* The metadata questions read :meth:`Snapshot.live_files` instead: the
+  reconciled live adds collected once per snapshot (replayed on the
+  driver for logs under ``_LOCAL_LOG_CAP``), with numeric min/max
+  stats conformed in Python exactly as ``from_json`` types them. This
+  module is the one place that knows the stats format.
 
 Semantics cross-checked against the reference's fixture corpus at
 ``/root/reference/tests/reader_tests/generated/`` (11 tables: checkpoint
@@ -31,10 +36,13 @@ stats variants).
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
-from dataclasses import dataclass
-from functools import reduce
+import struct
+from dataclasses import dataclass, field
+from decimal import ROUND_HALF_UP, Context, Decimal, InvalidOperation
+from functools import cached_property, reduce
 from urllib.parse import unquote
 
 from levi_spark.fs import fs_for, join_path
@@ -288,6 +296,122 @@ def stats_schema(data_schema: T.StructType) -> T.StructType:
             T.StructField("nullCount", _nullcount_schema(data_schema)),
         ]
     )
+
+
+_INTEGRAL_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+_INTEGRAL_TYPES = tuple(_INTEGRAL_BITS)
+NUMERIC_STATS_TYPES = (*_INTEGRAL_TYPES, T.FloatType, T.DoubleType, T.DecimalType)
+# JSON string tokens from_json reads as non-finite floats
+_NON_FINITE = {
+    "NaN": math.nan,
+    "Infinity": math.inf, "+Infinity": math.inf, "+INF": math.inf,
+    "-Infinity": -math.inf, "-INF": -math.inf,
+}
+_DECIMAL_CTX = Context(prec=80)
+
+
+def to_float32(x: float) -> float:
+    """``x`` rounded to the nearest float32, widened back to a Python
+    float (how a FloatType value reaches the driver)."""
+    try:
+        return struct.unpack("f", struct.pack("f", x))[0]
+    except OverflowError:
+        return math.copysign(math.inf, x)
+
+
+def _conform_stat(dt: T.DataType, v):
+    """A parsed min/max stat conformed to the numeric column type ``dt``
+    as ``from_json`` types it (None where it yields NULL): integrals
+    must be in-range JSON integers, FloatType rounds to float32,
+    DecimalType rounds HALF_UP to its scale and must fit its
+    precision. ``v`` comes from ``json.loads(parse_float=Decimal)``,
+    so decimal text is exact."""
+    if v is None or isinstance(v, bool):
+        return None
+    if isinstance(dt, _INTEGRAL_TYPES):
+        half = 1 << (_INTEGRAL_BITS[type(dt)] - 1)
+        return v if isinstance(v, int) and -half <= v < half else None
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        if isinstance(v, str):
+            v = _NON_FINITE.get(v)
+        if not isinstance(v, (int, float, Decimal)):
+            return None
+        try:
+            x = float(v)
+        except OverflowError:
+            x = math.inf if v > 0 else -math.inf
+        return to_float32(x) if isinstance(dt, T.FloatType) else x
+    if isinstance(dt, T.DecimalType):
+        if isinstance(v, float):  # NaN / Infinity tokens
+            return None
+        try:
+            d = Decimal(v)
+            if not d.is_finite():
+                return None
+            d = d.quantize(Decimal(1).scaleb(-dt.scale), ROUND_HALF_UP, _DECIMAL_CTX)
+        except (InvalidOperation, TypeError, ValueError):
+            return None
+        return d if len(d.as_tuple().digits) <= dt.precision else None
+    return None
+
+
+def _numeric_minmax(
+    stats: str | None, cols: tuple[tuple[str, str, T.DataType], ...]
+) -> tuple[dict, dict]:
+    """(minValues, maxValues) of one add's stats JSON for the numeric
+    ``(logical, physical, type)`` columns, keyed by logical name; a
+    missing, NULL or unconformable stat is absent."""
+    try:
+        d = json.loads(stats, parse_float=Decimal) if stats else None
+    except ValueError:
+        d = None
+    if not isinstance(d, dict):
+        return {}, {}
+    out = []
+    for key in ("minValues", "maxValues"):
+        vals = d.get(key)
+        vals = vals if isinstance(vals, dict) else {}
+        conformed = {}
+        for logical, physical, dt in cols:
+            v = _conform_stat(dt, vals.get(physical))
+            if v is not None:
+                conformed[logical] = v
+        out.append(conformed)
+    return out[0], out[1]
+
+
+@dataclass(frozen=True)
+class LiveFile:
+    """One live data file, as the metadata plane asks about it.
+
+    ``path`` is the URL-decoded add path (table-relative, or absolute
+    for a shallow clone's adds); ``version`` is the commit whose add won
+    reconciliation. ``min_values`` / ``max_values`` hold the file's
+    stats for the table's top-level numeric data columns, keyed by
+    logical column name (read under the physical name when column
+    mapping is on) and typed exactly as ``from_json`` types them in
+    :meth:`Snapshot.add_actions`. They are parsed on first access, so
+    questions about sizes alone never decode stats JSON."""
+
+    path: str
+    size: int | None
+    modification_time: int | None
+    version: int
+    partition_values: dict
+    stats: str | None = field(repr=False)
+    stat_columns: tuple = field(repr=False, compare=False)
+
+    @cached_property
+    def _minmax(self) -> tuple[dict, dict]:
+        return _numeric_minmax(self.stats, self.stat_columns)
+
+    @property
+    def min_values(self) -> dict:
+        return self._minmax[0]
+
+    @property
+    def max_values(self) -> dict:
+        return self._minmax[1]
 
 
 def _leaf_paths(schema: T.StructType, prefix: str = "") -> list[str]:
@@ -656,6 +780,7 @@ class Snapshot:
         self._protocol: dict | None = None
         self._actions: DataFrame | None = None
         self._live_rows: list | None = None
+        self._live_files: list[LiveFile] | None = None
         self._local: list | None | bool = None  # False = too big / unparseable
 
     def _cp_files(self) -> tuple[list[str], str | None]:
@@ -1202,6 +1327,41 @@ class Snapshot:
             if self._live_rows is None:
                 self._live_rows = self.live_adds_raw().collect()
         return self._live_rows
+
+    def live_files(self) -> list[LiveFile]:
+        """The live files as :class:`LiveFile` entries, built once per
+        snapshot from :meth:`live_adds_collected` (no rows beyond the
+        ones scan planning already holds). The metadata questions —
+        file counts and sizes, min/max skipping, compaction and dedup
+        file lists — are answered from this list on the driver: under
+        ``_LOCAL_LOG_CAP`` that is zero Spark jobs, above it the one
+        distributed collect every scan already pays."""
+        if self._live_files is None:
+            meta = self.metadata
+            parts = set(meta.partition_columns)
+            phys = meta.physical_names
+            cols = tuple(
+                (f.name, phys[f.name], f.dataType)
+                for f in meta.schema.fields
+                if f.name not in parts
+                and isinstance(f.dataType, NUMERIC_STATS_TYPES)
+            )
+            files = []
+            for r in self.live_adds_collected():
+                a = r["add"]
+                files.append(
+                    LiveFile(
+                        path=unquote(a["path"]),
+                        size=a["size"],
+                        modification_time=a["modificationTime"],
+                        version=r["version"],
+                        partition_values=dict(a["partitionValues"] or {}),
+                        stats=a["stats"],
+                        stat_columns=cols,
+                    )
+                )
+            self._live_files = files
+        return self._live_files
 
     def add_actions(self) -> DataFrame:
         """One row per live data file, stats parsed.

@@ -212,7 +212,12 @@ def _footer_stats(
                         # (oversized binary) — only the aggregate knows
                         return None
                     continue
-                lo, hi = st.min, st.max
+                try:
+                    lo, hi = st.min, st.max
+                except NotImplementedError:
+                    # e.g. INT64-backed decimals, which pyarrow cannot
+                    # decode from the footer — the aggregate can
+                    return None
                 if any(
                     isinstance(v, float) and math.isnan(v) for v in (lo, hi)
                 ):

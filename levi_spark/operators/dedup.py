@@ -96,7 +96,7 @@ def kill_duplicates_targeted(table: LeviTable, duplication_columns: list[str]) -
     :func:`kill_duplicates` both rewrite the whole table. Here:
 
     1. One full scan, aggregated map-side, produces per duplicate key
-       the *set of files* holding its rows (``_metadata.file_name`` +
+       the *set of files* holding its rows (lineage ``_file_name`` +
        ``collect_set`` — output is metadata-sized, bounded by the file
        count, never the row count).
     2. Only those "hit" files are re-read; the anti-join against the
@@ -118,8 +118,8 @@ def kill_duplicates_targeted(table: LeviTable, duplication_columns: list[str]) -
         raise TypeError("duplication_columns must be a non-empty list")
     dcols = list(duplication_columns)
     snap = table.snapshot()
-    df = snap.to_df()
-    _check_columns(df.columns, dcols)
+    _check_columns(snap.metadata.data_columns, dcols)
+    df = snap.to_df(with_lineage=True)
 
     non_null = functools.reduce(
         operator.and_, [F.col(c).isNotNull() for c in dcols]
@@ -128,7 +128,7 @@ def kill_duplicates_targeted(table: LeviTable, duplication_columns: list[str]) -
         r["__fn"]
         for r in (
             df.where(non_null)
-            .select(*dcols, F.col("_metadata.file_name").alias("__fn"))
+            .select(*dcols, F.col("_file_name").alias("__fn"))
             .groupBy(*dcols)
             .agg(F.count(F.lit(1)).alias("__cnt"), F.collect_set("__fn").alias("__fns"))
             .where(F.col("__cnt") > 1)
@@ -178,31 +178,28 @@ def kill_duplicates_targeted(table: LeviTable, duplication_columns: list[str]) -
     }
 
 
+_ORDER_META = ("__file_name", "__file_seq", "__row_idx")
+
+
 def _physical_order_df(table: LeviTable) -> DataFrame:
     """Table data plus ``__file_name``/``__file_seq``/``__row_idx``
-    columns reproducing single-process read order: add actions sorted by
-    (commit version, path), then parquet row index within each file."""
+    columns reproducing single-process read order: live files sorted by
+    (commit version, path) on the driver, then parquet row index within
+    each file (``to_df``'s lineage columns, which also resolve on
+    partitioned tables)."""
     snap = table.snapshot()
-    files = (
-        snap.add_actions()
-        .select("path", "commit_version")
-        .orderBy("commit_version", "path")
-        .collect()
+    files = sorted(snap.live_files(), key=lambda f: (f.version, f.path))
+    seq_df = table.spark.createDataFrame(
+        [(os.path.basename(f.path), i) for i, f in enumerate(files)],
+        "__file_name string, __file_seq int",
     )
-    seq_rows = [(os.path.basename(r["path"]), i) for i, r in enumerate(files)]
-    spark = table.spark
-    seq_df = spark.createDataFrame(seq_rows, ["__file_name", "__file_seq"])
-    df = snap.to_df()
-    data_cols = df.columns
     return (
-        df.withColumn("__file_name", F.col("_metadata.file_name"))
-        .withColumn("__row_idx", F.col("_metadata.row_index"))
+        snap.to_df(with_lineage=True)
+        .withColumnRenamed("_file_name", "__file_name")
+        .withColumnRenamed("_row_index", "__row_idx")
         .join(F.broadcast(seq_df), on="__file_name", how="left")
-        .select(*data_cols, "__file_name", "__file_seq", "__row_idx")
+        .select(*snap.metadata.data_columns, *_ORDER_META)
     )
-
-
-_ORDER_META = ("__file_name", "__file_seq", "__row_idx")
 
 
 def _targeted_loser_rewrite(table: LeviTable, losers: DataFrame) -> dict:

@@ -35,7 +35,6 @@ Scale stance:
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -94,23 +93,23 @@ def compact_small_files(
     """Rewrite every live file smaller than ``small_bytes`` into
     ~``target_bytes`` files; one commit replaces them atomically.
 
+    The plan — which files are small, their total bytes, the file
+    counts before and after — comes from the log (``add.size`` over
+    :meth:`Snapshot.live_files`), so it runs no Spark job under the log
+    cap and works for any filesystem scheme the table path uses.
+
     Returns {"files_removed", "files_added", "version"} (version is -1
     when nothing qualified — fewer than 2 small files is a no-op).
     """
     log = DeltaLog(spark, path)
     snap = log.snapshot()
     part_cols = list(snap.metadata.partition_columns)
-    smalls = [
-        r["path"]
-        for r in snap.add_actions()
-        .where(F.col("size_bytes") < small_bytes)
-        .select("path")
-        .collect()
-    ]
-    if len(smalls) < 2:
+    live = snap.live_files()
+    small = [f for f in live if f.size is not None and f.size < small_bytes]
+    if len(small) < 2:
         return {"files_removed": 0, "files_added": 0, "version": -1}
-    total = sum(os.stat(os.path.join(path, p)).st_size for p in smalls)
-    n_out = max(1, math.ceil(total / target_bytes))
+    smalls = [f.path for f in small]
+    n_out = max(1, math.ceil(sum(f.size for f in small) / target_bytes))
 
     df = _with_preserved_row_ids(
         snap, lambda rid: snap.to_df(paths=smalls, with_row_ids=rid)
@@ -125,11 +124,10 @@ def compact_small_files(
         operation="OPTIMIZE",
         identity_passthrough=True,  # rewrite carries existing ids
     )
-    after_files = DeltaLog(spark, path).snapshot().add_actions().count()
+    after_files = len(DeltaLog(spark, path).snapshot().live_files())
     return {
         "files_removed": len(smalls),
-        "files_added": after_files
-        - (snap.add_actions().count() - len(smalls)),
+        "files_added": after_files - (len(live) - len(smalls)),
         "version": version,
         "prev_version": before,
     }
@@ -383,7 +381,7 @@ def auto_optimize(
     be called per-table from a maintenance loop.
     """
     snap = DeltaLog(spark, path).snapshot()
-    sizes = [r["add"]["size"] for r in snap.live_adds_collected()]
+    sizes = [f.size for f in snap.live_files()]
     n_files = len(sizes)
     n_small = sum(1 for s in sizes if s is not None and s < small_bytes)
     frac = (n_small / n_files) if n_files else 0.0

@@ -158,3 +158,34 @@ def test_drop_duplicates_pkey_errors(spark, tmp_path):
         drop_duplicates_pkey(t, "col1", ["missing"])
     with pytest.raises(ValueError):
         drop_duplicates_pkey(t, "col1", ["col2"])  # pk not unique
+
+
+def _mk_partitioned(spark, path):
+    """Three partitions; every duplicate group spans two of them."""
+    rows = [(i, i % 4, f"p{i % 3}") for i in range(24)]
+    df = spark.createDataFrame(rows, ["id", "k", "part"])
+    write_delta(df, path, mode="error", partition_by=["part"])
+    return LeviTable(spark, path)
+
+
+def test_drop_duplicates_on_partitioned_table(spark, tmp_path):
+    t = _mk_partitioned(spark, str(tmp_path / "pt"))
+    res = drop_duplicates(t, ["k"])
+    got = sorted(tuple(r) for r in t.to_df().select("k", "part").collect())
+    assert [k for k, _ in got] == [0, 1, 2, 3]
+    assert res["rows_deleted"] == 20
+    # partition values ride through the rewrite
+    assert all(p in ("p0", "p1", "p2") for _, p in got)
+
+
+def test_kill_duplicates_targeted_on_partitioned_table(spark, tmp_path):
+    t = _mk_partitioned(spark, str(tmp_path / "pt"))
+    write_delta(
+        spark.createDataFrame([(100, 100, "p1")], ["id", "k", "part"]),
+        str(tmp_path / "pt"), mode="append", partition_by=["part"],
+    )
+    res = kill_duplicates_targeted(t, ["k"])
+    assert res["rows_deleted"] == 24
+    assert [tuple(r) for r in t.to_df().select("id", "k", "part").collect()] == [
+        (100, 100, "p1")
+    ]

@@ -239,6 +239,21 @@ def test_metadata_ops_over_uri(spark, furi):
     assert st["num_files_skipped"] > 0
 
 
+def test_compact_small_files_over_uri(spark, furi):
+    from levi_spark.operators.layout import compact_small_files
+
+    p = furi("t12")
+    write_delta(_df(spark, 0, 300), p)
+    write_delta(_df(spark, 300, 400), p, mode="append")
+    log = DeltaLog(spark, p)
+    n_before = len(log.snapshot().live_files())
+    res = compact_small_files(spark, p, small_bytes=10**9, target_bytes=10**9)
+    assert res["files_removed"] == n_before > 1
+    assert res["files_added"] == 1
+    snap = DeltaLog(spark, p).snapshot()
+    assert snap.version == res["version"] and len(snap.live_files()) == 1
+    assert snap.to_df().agg(F.sum("k")).first()[0] == sum(range(400))
+
 def test_scratch_base_uri_routes_gate_tables(spark, tmp_path, monkeypatch):
     # LEVI_SCRATCH_BASE as a file:// URI: gate lifecycle tables build
     # through the scheme seam end to end (write + read + verify legs)

@@ -61,6 +61,16 @@ def test_latest_version_golden(spark, fixtures_dir):
     assert latest_version(log.snapshot()) == 2
 
 
+def test_latest_version_of_time_travelled_snapshot(spark, tmp_path):
+    loc = str(tmp_path / "tt")
+    for i in range(4):
+        write_delta(spark.range(i, i + 1), loc, mode="error" if i == 0 else "append")
+    log = DeltaLog(spark, loc)
+    assert latest_version(log.snapshot(version=1)) == 1
+    assert latest_version(log.snapshot()) == 3
+    assert latest_version(log) == 3
+    assert latest_version(loc, spark=spark) == 3
+
 def test_str_to_bytes():
     assert str_to_bytes("100b") == 100
     assert str_to_bytes("1kb") == 1_000
